@@ -23,10 +23,10 @@ import graft.streaming.Ingest
   *
   * Batching is CALLER-driven (a scheduler loop, or a spec's deterministic
   * flush): micro-batch semantics without coupling this class to a clock.
-  * The store here is in-memory (localCheckpoint per batch, previous batch
-  * released) — the durable deployment shape is [[streaming.Ingest.start]]
-  * over a parquet/Delta store dir with a streaming checkpoint; serving and
-  * subscription wiring are identical either way.
+  * The store is in-memory: a batch's new rows are collected once and
+  * swapped in at a fixed defaultParallelism width ([[swapIn]]). The
+  * durable shape is [[streaming.Ingest.start]] over a parquet/Delta store
+  * dir; serving and subscription wiring are identical either way.
   */
 final class LivePipeline(
     spark: SparkSession,
@@ -71,8 +71,8 @@ final class LivePipeline(
   /** Serving head cache, the live shape's token mirroring the durable
     * pipeline's: whole-store generation + the feed's landed-batch
     * counter, so a drain invalidates only the feeds it touched.
-    * [[drainBatch]] records metrics AFTER the snapshot swap so a token
-    * can never precede the data it names. */
+    * [[swapIn]]'s callers record metrics AFTER the snapshot swap so a
+    * token can never precede the data it names. */
   val headCache = new graft.serving.FeedHeadCache(spark, _ => store,
     key => Some(s"g$storeGen:${metrics.keyCycle(key)}"))
 
@@ -115,27 +115,9 @@ final class LivePipeline(
     import spark.implicits._
     val conditions = control.conditions // live: admin edits land next drain
     val posts = Firehose.postViews(Firehose.decodeCborFrames(buf.toDF("frame")))
-    val fresh = Ingest.processBatch(spark, store, posts, conditions, profiles).persist()
-    val perKey = fresh.groupBy("key").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val next = store.unionByName(fresh).localCheckpoint() // eager: serving sees a stable snapshot
-    val n = next.count()
-    fresh.unpersist(blocking = false)
-    store = next
-    // record (and bump the per-feed head-cache tokens) only AFTER the
-    // snapshot swap: a request between the two would otherwise cache the
-    // OLD snapshot under the NEW token — a stale head that never heals
-    metrics.record(conditions, perKey,
-      math.max(1L, (System.nanoTime() - t0) / 1000000L))
-    // the PREVIOUS snapshot is NOT unpersisted here: a concurrent HTTP
-    // request may still be paging it, and a localCheckpoint whose blocks
-    // are dropped cannot recompute (truncated lineage). Once unreachable
-    // it is reclaimed by Spark's ContextCleaner after GC — bounded by one
-    // superseded snapshot between collections, leak-free without racing
-    // the serving path.
-    val added = n - storeRows
-    storeRows = n
-    added
+    val perKey = swapIn(Ingest.processBatch(spark, store, posts, conditions, profiles))
+    metrics.record(conditions, perKey, elapsedMs(t0))
+    perKey.values.sum
   }
 
   /** Initial backfill for feeds with no stored rows yet (T2): cascade a
@@ -145,28 +127,45 @@ final class LivePipeline(
     * source; feeds that already hold rows are untouched. */
   def backfillFromSearch(searchHits: DataFrame): Long = synchronized {
     val t0 = System.nanoTime()
+    val conditions = control.conditions
     val posts = Firehose.searchHitsAsPostViews(searchHits)
-    val fresh = Ingest.backfill(spark, store, posts, control.conditions, profiles)
-      .persist()
-    try {
-      val perKey = fresh.groupBy("key").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val next = store.unionByName(fresh).localCheckpoint()
-      val n = next.count()
-      store = next
-      // per-key metrics AFTER the swap (the token-ordering rule), same
-      // as the durable shape: backfilled feeds report lastExecTime/
-      // recordCount immediately and invalidate ONLY their own heads —
-      // a whole-store generation bump here rebuilt every cached head
-      val touched = control.conditions.filter(c => perKey.contains(c.key))
-      if (touched.nonEmpty)
-        metrics.record(touched, perKey,
-          math.max(1L, (System.nanoTime() - t0) / 1000000L))
-      val added = n - storeRows
-      storeRows = n
-      added
-    } finally fresh.unpersist(blocking = false)
+    val perKey = swapIn(Ingest.backfill(spark, store, posts, conditions, profiles))
+    // only backfilled feeds record, so only their heads rebuild
+    val touched = conditions.filter(c => perKey.contains(c.key))
+    if (touched.nonEmpty) metrics.record(touched, perKey, elapsedMs(t0))
+    perKey.values.sum
   }
+
+  /** The one store swap. ONE action collects `fresh` — exactly the rows
+    * this swap adds to the in-memory store, so the driver holds at most
+    * one drain's store growth — and the per-feed counts come from those
+    * rows. A non-empty delta swaps in `store ∪ rows` coalesced to
+    * defaultParallelism partitions, checkpointed eagerly (a stable
+    * snapshot whose width never grows); an empty delta, such as an
+    * all-replay batch, leaves the snapshot in place. The rows go back as
+    * a LOCAL relation, never as `fresh`'s plan or its checkpoint: a
+    * checkpoint keeps the estimate of the plan it cut (the cascade's join
+    * estimates as the product of its sides), and a store estimated at
+    * hundreds of GiB loses the next drain's broadcast anti-join. Callers
+    * record metrics (the head-cache tokens) only AFTER the swap, so a
+    * token can never name the OLD snapshot. The previous snapshot is not
+    * unpersisted: a concurrent request may still page it, and its
+    * truncated lineage cannot recompute; the ContextCleaner reclaims it. */
+  private def swapIn(fresh: DataFrame): Map[String, Long] = {
+    val rows = fresh.collect()
+    if (rows.nonEmpty) {
+      val delta = spark.createDataFrame(java.util.Arrays.asList(rows: _*), fresh.schema)
+      store = store.unionByName(delta)
+        .coalesce(spark.sparkContext.defaultParallelism).localCheckpoint()
+      storeRows += rows.length
+    }
+    rows.groupMapReduce(_.getAs[String]("key"))(_ => 1L)(_ + _)
+  }
+
+  private def elapsedMs(t0: Long): Long =
+    math.max(1L, (System.nanoTime() - t0) / 1000000L)
+
+  private[graft] def servedStore: DataFrame = store // specs check its shape
 
   def storedCursor: Long = cursor.get()
   def storedRows: Long = storeRows

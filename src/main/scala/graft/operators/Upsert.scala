@@ -7,11 +7,12 @@ import org.apache.spark.sql.functions._
   * NOTHING and catch-up membership test
   * (/root/reference/src/subscription.ts:273-278,362-366) as anti-joins.
   *
-  * Scale notes: the anti-join shuffles only on the key columns and
-  * broadcast-converts automatically when the incoming batch is small (the
-  * common ingest shape: small delta vs large stored table — Spark picks the
-  * stored side as streamed, delta as broadcast/build). Order-insensitive
-  * superset of the reference's sequential early-exit.
+  * Scale notes: the anti-join shuffles only on the key columns, and
+  * broadcast-converts when the STORED side is small. For LEFT ANTI Spark
+  * can build only the right side, which is the stored keys, never the
+  * incoming delta: so each ingest batch collects the stored keys, an
+  * O(store) job per batch, and the delta streams past them.
+  * Order-insensitive superset of the reference's sequential early-exit.
   */
 object Upsert {
 

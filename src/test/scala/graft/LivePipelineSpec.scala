@@ -2,9 +2,16 @@ package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.execution.RDDScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+
 import graft.domain.Fixtures
 import graft.serving.{Auth, FeedServer}
-import graft.sources.{SubscribeReposStub, WireFixtures}
+import graft.sources.{Firehose, SubscribeReposStub, WireFixtures}
+import graft.streaming.Ingest
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
@@ -19,6 +26,14 @@ class LivePipelineSpec extends SparkSpec {
 
   private val mapper = new ObjectMapper()
   private val http = HttpClient.newHttpClient()
+
+  /** An admin-plane POST carrying the passkey "pk". */
+  private def adminPost(port: Int, path: String, body: String) =
+    http.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+      .header("Content-Type", "application/json")
+      .header("x-starrtsky-webpasskey", "pk")
+      .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+      HttpResponse.BodyHandlers.ofString())
 
   test("wire → websocket → micro-batch ingest → served XRPC feed page") {
     // 10 commits; texts 1-6 say "spark", 7-10 do not → cascade keeps 6
@@ -89,12 +104,7 @@ class LivePipelineSpec extends SparkSpec {
       assert(live.client.awaitStopped(120000))
       assert(live.drainBatch() == 3L) // only "spark" matches the base feed
 
-      def post(path: String, body: String) =
-        http.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
-          .header("Content-Type", "application/json")
-          .header("x-starrtsky-webpasskey", "pk")
-          .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
-          HttpResponse.BodyHandlers.ofString())
+      def post(path: String, body: String) = adminPost(port, path, body)
 
       // add a feed over the wire; replay the frames (at-least-once seam):
       // the new feed captures the vector posts, base dedups to zero
@@ -180,6 +190,85 @@ class LivePipelineSpec extends SparkSpec {
       // and the control plane serves the width: getQuery state was
       // published for a feed that captured nothing too
       assert(live.control.conditions.size == 1000)
+    } finally live.stop()
+  }
+
+  test("every swap keeps the served store at a fixed width; a drain that adds nothing keeps the snapshot") {
+    // a dozen drains that add rows, an all-replay drain, an empty drain,
+    // then an admin delete: the store's partition count must not grow
+    // with the drain count, storedRows must match the snapshot it names,
+    // and a drain that adds nothing must leave the very same snapshot
+    val conditions = Seq(Fixtures.cond(key = "a", inputRegex = "spark"),
+      Fixtures.cond(key = "b", inputRegex = "vector"))
+    val cfg = FeedServer.Config("did:web:w.example.com", "w.example.com", "did:plc:pub")
+    val live = new LivePipeline(spark, conditions, cfg,
+      service = "ws://127.0.0.1:1", adminPasskey = Some("pk")) // frames offered directly
+    val width = spark.sparkContext.defaultParallelism
+    def checkStore(): Unit = {
+      val s = live.servedStore
+      assert(s.rdd.getNumPartitions <= width, s"store width ${s.rdd.getNumPartitions} > $width")
+      assert(live.storedRows == s.count())
+    }
+    try {
+      val port = live.server.start()
+      val frames = (1L to 60L).map(i => WireFixtures.commitFrame(i,
+        if (i % 2 == 0) s"spark width $i" else s"vector width $i"))
+      frames.grouped(5).foreach { batch =>
+        batch.foreach(live.offer)
+        assert(live.drainBatch() == 5L)
+        checkStore()
+      }
+      val before = live.servedStore
+      frames.take(10).foreach(live.offer)
+      assert(live.drainBatch() == 0L)
+      assert(live.servedStore eq before, "an all-replay drain must keep the snapshot")
+      assert(live.drainBatch() == 0L)
+      assert(live.servedStore eq before, "an empty drain must keep the snapshot")
+      assert(live.storedRows == 60L)
+      checkStore()
+      assert(adminPost(port, "/deleteCondition", """{"key":"b"}""").statusCode() == 200)
+      assert(live.storedRows == 30L)
+      checkStore()
+    } finally live.stop()
+  }
+
+  test("after several drains the dedup anti-join broadcasts the store's keys, no exchange over the store") {
+    // the swap puts rows back as a local relation, so the checkpointed
+    // store carries its real size; a store estimated from the cascade's
+    // plan (its join estimates as the product of its sides) would lose
+    // the static broadcast and shuffle the whole store every drain
+    import spark.implicits._
+    // a realistic width: with 1 000 conditions the cascade's estimate is
+    // far past the broadcast threshold, with one it would stay small
+    val conditions = ScaleSmoke.standingConditions(1000)
+    val cfg = FeedServer.Config("did:web:p.example.com", "p.example.com", "did:plc:pub")
+    val live = new LivePipeline(spark, conditions, cfg, service = "ws://127.0.0.1:1")
+    def frame(i: Long) = WireFixtures.commitFrame(i, s"topic$i plan probe")
+    try {
+      (1L to 40L).grouped(10).foreach { ids =>
+        ids.foreach(i => live.offer(frame(i)))
+        assert(live.drainBatch() == 10L)
+      }
+      val probe = Firehose.postViews(Firehose.decodeCborFrames(
+        (35L to 45L).map(frame).toDF("frame")))
+      // the static plan, AQE off as in PlanShapeSpec: AQE starts from it
+      val prev = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val plan = try Ingest.processBatch(spark, live.servedStore, probe, conditions, None)
+        .queryExecution.executedPlan
+      finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+      val storeJoins = plan.collect {
+        case j: BaseJoinExec if j.right.exists(_.isInstanceOf[RDDScanExec]) => j
+      }
+      val estimate = live.servedStore.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(storeJoins.size == 1, s"store estimated at $estimate bytes:\n$plan")
+      storeJoins.head match {
+        case j: BroadcastHashJoinExec =>
+          assert(j.joinType == LeftAnti && j.buildSide == BuildRight, plan)
+          assert(j.right.collect { case e: ShuffleExchangeExec => e }.isEmpty, plan)
+        case j => fail(s"store estimated at $estimate bytes, so the dedup " +
+          s"anti-join planned as ${j.nodeName}:\n$plan")
+      }
     } finally live.stop()
   }
 }
